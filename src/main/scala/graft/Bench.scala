@@ -33,7 +33,7 @@ package graft
   *    brings its own memory channels, so per-executor DRAM bandwidth is
   *    CONSTANT across the two sizes. Inside this single box, bandwidth
   *    is shared: the no-Spark extraction kernel itself tops out at
-  *    ~2.4-2.7x from 4->16 threads (ThreadProbe/KernelScaleProbe — a
+  *    ~2.4-2.7x from 4->16 threads (no-Spark thread-scaling probes — a
   *    hard 0.6-0.7 ceiling BEFORE Spark even runs), because 16 threads
   *    of DOM/hOCR parsing saturate the box's DIMMs, not because the
   *    plan stops scaling. Measuring 4-vs-16 in one box therefore
@@ -210,7 +210,11 @@ object Bench {
         try {
           fn(s32, sfDir).write.format("noop").mode("overwrite").save()
           (name, (System.nanoTime() - tq) / 1e9, l32.shuffleWrite.sum() - w0)
-        } catch { case _: Throwable => (name, -1.0, 0L) }
+        } catch { case e: Throwable =>
+          System.err.println(
+            s"BENCHWARN: battery query $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          (name, -1.0, 0L)
+        }
         // per-query cache teardown (round-3 verdict #6): scoped
         // intra-query caches release here so every battery entry starts
         // cold and is independently measurable; only the documented memos

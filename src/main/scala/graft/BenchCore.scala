@@ -69,9 +69,9 @@ private[graft] object BenchCore {
     * 3: with 96 replicas the 16-wide level never produced one clean
     * observation in 2 h — every rep outlived the bucket it started
     * with). 32 replicas keep the wide-level rep ~8-12 s — long enough
-    * that fixed DAG/stage cost stays a few percent (measured via
-    * LevelProbe 96-vs-32 intercept), short enough that the rep ends in
-    * the same host state it started in. */
+    * that fixed DAG/stage cost stays a few percent (measured via a
+    * single-level 96-vs-32 replica intercept), short enough that the
+    * rep ends in the same host state it started in. */
   val ScaleReplicas = 32
 
   /** Warm-up: the REPLICATED plan at reduced scale — warming with the
@@ -134,7 +134,7 @@ private[graft] object BenchCore {
     * (no Spark). 20k DISTINCT items (~60+ MB with rendered hOCR),
     * single pass — the working set must exceed L3 so the calibration is
     * DRAM-bound like the real extraction path (a cache-resident loop
-    * overstates the ceiling; StageProbe: allocation rate, not CPU, is
+    * overstates the ceiling; sampling profile: allocation rate, not CPU, is
     * the scaling limiter). The 4->16 kernel ratio is the scaling
     * CEILING any plan doing this work in one JVM can reach. */
   lazy val kernelWork: Array[(String, String, String)] =

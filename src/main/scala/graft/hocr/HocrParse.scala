@@ -147,7 +147,7 @@ object HocrParse {
     * into locals and constructs each case class ONCE: the previous
     * copy-per-attribute style allocated 4-6 intermediate instances per
     * node, and allocation rate is the extraction path's measured
-    * scaling limiter (CLAUDE.md / StageProbe). Field-for-field the same
+    * scaling limiter (CLAUDE.md). Field-for-field the same
     * result, including attr-order overwrite semantics. */
   def processPage(n: Node): HPage = {
     var id = ""; var lang = ""; var title = ""

@@ -40,7 +40,7 @@ object HtmlDom {
     * all leaves can share one empty instance instead of allocating two
     * 16-slot ArrayBuffers each. Leaves are ~half of all nodes and this
     * sits on the extraction hot path where allocation rate is the
-    * 16-thread scaling limiter (StageProbe profile).
+    * 16-thread scaling limiter (sampling profile).
     *
     * The invariant is enforced STRUCTURALLY, not by comment: the shared
     * instances throw on every mutating call, so a future code path that

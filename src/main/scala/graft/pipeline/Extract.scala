@@ -52,29 +52,10 @@ object Extract {
       col("span.media_ref").as("media_ref"),
       col("pos").as("order"))
 
-  /** Exploded per-span extraction, one row per span.
-    *
-    * If the input table carries a materialized `n_spans` column (the
-    * corpus writer emits one), the small/big split filters on the COLUMN
-    * so parquet row-group statistics prune the mega-doc branch's scan
-    * (PushedFilters: n_spans > threshold skips nearly every row group);
-    * otherwise it falls back to size(spans), which cannot push down. */
-  def extractSpans(input: DataFrame, spreadThreshold: Int = DefaultSpreadThreshold): DataFrame = {
-    // PRE-SPLIT layout: every row is already a bounded <= PartSize unit,
-    // so extraction fuses into the (parallel) scan with NO repartition
-    // and `order` is the reconstructed GLOBAL position — without this
-    // dispatch, pos would be part-local and duplicate across parts
-    if (input.columns.contains("part_idx"))
-      return extracted(preSplitExploded(input))
-    val withN = withNSpans(input)
-    val small = withN.filter(col("n_spans") <= spreadThreshold)
-      .select(col("doc_id"), posexplode(col("spans")).as(Seq("pos", "span")))
-    val big = withN.filter(col("n_spans") > spreadThreshold)
-      .select(col("doc_id"), posexplode(col("spans")).as(Seq("pos", "span")))
-      .repartition(col("doc_id"), col("pos"))
-    extracted(small).unionAll(extracted(big))
-  }
-
+  /** A materialized `n_spans` column (the corpus writer emits one) lets
+    * the small/big split push down to parquet row-group statistics, so
+    * the mega-doc branch's scan skips nearly every row group; without it
+    * the split falls back to size(spans), which cannot push down. */
   private def withNSpans(input: DataFrame): DataFrame =
     if (input.columns.contains("n_spans")) input
     else input.withColumn("n_spans", size(col("spans")))

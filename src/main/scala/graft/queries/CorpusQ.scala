@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import QCache.ScopedCacheOps
+import Relational.documents
 
 /** Corpus-curation operators a large-scale training-data pipeline runs
   * on top of the per-doc signals: Gopher-style repetition filters,
@@ -29,9 +30,6 @@ import QCache.ScopedCacheOps
   *     same rows twice for the same result.
   */
 object CorpusQ {
-
-  def documents(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   private def toksOf(s: SparkSession, dir: String): DataFrame =
     documents(s, dir).select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))

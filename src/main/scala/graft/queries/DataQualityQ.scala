@@ -5,6 +5,8 @@ import java.nio.file.Paths
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import Relational.documents
+
 /** Pipeline-reliability operators (engine-side additions, SURVEY.md
   * §2.F/G): a declarative data-quality check suite (the Deequ/
   * expectations pattern), a JSONL sink→source round-trip through
@@ -19,9 +21,6 @@ import org.apache.spark.sql.functions._
   * independent prediction, never an accident of the generator).
   */
 object DataQualityQ {
-
-  private def documents(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   // ---------------------------------------------------------------------
   // q_dq_checks — declarative constraint validation with planted bad rows

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import QCache.ScopedCacheOps
+import Relational.documents
 
 /** Deduplication operators for a training-data pipeline: exact dedup,
   * MinHash+LSH near-dup candidates, n-gram Jaccard, SimHash.
@@ -23,9 +24,6 @@ import QCache.ScopedCacheOps
   * [[cachedBands]] memo below (five consumers, documented there).
   */
 object DedupQ {
-
-  def documents(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   private def norm(c: Column): Column = lower(regexp_replace(c, "\\s+", " "))
 
@@ -1088,8 +1086,8 @@ object DedupQ {
        |${simhashNeardupTail("sims", shr, xor)}""".stripMargin
 
   /** The 60-vote sims aggregation alone — the expensive single pass
-    * over the token stream (also probed standalone by SimhashProbe). */
-  private[graft] def simhash60Sims(s: SparkSession, dir: String): DataFrame = {
+    * over the token stream. */
+  private def simhash60Sims(s: SparkSession, dir: String): DataFrame = {
     documents(s, dir).createOrReplaceTempView("documents")
     s.sql(
       s"""WITH ${simhash60Votes(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import QCache.ScopedCacheOps
+import Relational.documents
 
 /** Delta-processing + catalog operators (engine-side additions, SURVEY.md
   * §2.F/G — the reference pipeline is single-snapshot and keeps no
@@ -17,9 +18,6 @@ import QCache.ScopedCacheOps
   * integer basis points (never a rounded double ratio); hashes are md5.
   */
 object DeltaQ {
-
-  private def documents(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   // ---------------------------------------------------------------------
   // q_snapshot_diff — fingerprint diff of two corpus snapshots

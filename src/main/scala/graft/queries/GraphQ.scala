@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import QCache.ScopedCacheOps
+import Relational.documents
 
 /** Link-graph analytics over the crawl corpus — the selection signals a
   * web-scale training pipeline derives from the hyperlink structure
@@ -45,9 +46,6 @@ import QCache.ScopedCacheOps
   *     edge stream.
   */
 object GraphQ {
-
-  private def documents(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   /** Deterministic link edges (src, dst) — multigraph semantics: if two
     * j values collide on the same dst the edge counts twice, exactly as

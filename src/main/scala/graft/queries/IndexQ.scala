@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import QCache.ScopedCacheOps
+import Relational.documents
 
 /** Indexing / tokenizer-training operators a web-scale corpus platform
   * layers on the extraction battery (engine-side additions beyond the
@@ -20,9 +21,6 @@ import QCache.ScopedCacheOps
   * scan in both engines).
   */
 object IndexQ {
-
-  private def documents(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   private def events(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/events.parquet")

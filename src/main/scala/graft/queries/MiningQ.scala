@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import QCache.ScopedCacheOps
+import Relational.documents
 
 /** Text-mining operators a web-scale curation pipeline layers on top of
   * the dedup/similarity battery (reference scope boundary: ocrchestra
@@ -20,9 +21,6 @@ import QCache.ScopedCacheOps
   * documented oracle-safety rule for that function).
   */
 object MiningQ {
-
-  private def documents(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   private def norm(c: Column): Column = lower(regexp_replace(c, "\\s+", " "))
 
@@ -99,7 +97,7 @@ object MiningQ {
       // scan + ASCII rlike over full text + block window) executes once
       // per join side
       .scopedCache()
-    // Two exactness-preserving kernel bounds (FuzzyProbe measured the
+    // Two exactness-preserving kernel bounds (a standalone probe measured the
     // naive shape at 13-16x the raw DP cost: the `lev <= MaxEditDist`
     // filter is pushed into the join condition and evaluated on every
     // equal-block probe pair in BOTH orders, each a full O(n*m) DP):

@@ -14,10 +14,12 @@ import org.apache.spark.sql.Dataset
   * calls [[releaseScoped]] after EACH query's action so every entry
   * starts from a cold cache and is independently measurable.
   *
-  * The only cross-query cached state left is the two DOCUMENTED memos —
-  * [[DedupQ]]'s per-(session, sf) LSH band relation (five consumers) and
-  * [[graft.fixtures.CorpusGen.materializedPreSplit]] (on-disk, not a
-  * cache) — which deliberately do NOT register here.
+  * The only cross-query cached state left is DOCUMENTED and
+  * deliberately does NOT register here: [[DedupQ]]'s two per-(session,
+  * sf) memos — `sigMemo`, the MinHash signature relation, and
+  * `bandsMemo`, the LSH band relation derived from it (five consumers)
+  * — and [[graft.fixtures.CorpusGen.materializedPreSplit]] (on-disk,
+  * not a cache).
   */
 object QCache {
 

@@ -30,6 +30,7 @@ object Relational {
   def customer(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/customer.parquet")
   def nation(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/nation.parquet")
   def events(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/events.parquet")
+  def documents(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/documents.parquet")
 
   /** TPC-H Q1 shape: scan-side filter pushdown + partial aggregation. */
   def qAggPushdown(s: SparkSession, dir: String): DataFrame =

@@ -5,15 +5,13 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import QCache.ScopedCacheOps
+import Relational.documents
 
 /** Text-analysis operators for a training-data pipeline over the
   * `documents` table: token counting, quality scoring, language ID,
   * fingerprinting. All oracle-checkable: counts are exact ints, ratios
   * are int/int doubles (bit-identical across engines). */
 object TextAnalysisQ {
-
-  def documents(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   private val stopwords = Seq("the", "a", "and", "of", "to", "in", "is")
 

@@ -36,7 +36,7 @@ object GoStrings {
   /** Go strings.Fields: split around runs of whitespace, no empties.
     * Two-scan (count, then fill an exact-size array): this sits on the
     * extraction hot path where allocation rate is the 16-thread scaling
-    * limiter (StageProbe profile), so no growable buffer, no copy. */
+    * limiter (sampling profile), so no growable buffer, no copy. */
   def fields(s: String): Array[String] = {
     val n = s.length
     var count = 0

@@ -42,7 +42,7 @@ object BenchLevel {
     val corpus = BenchCore.corpusPath(spark, sfDir)
     // Warm the calibration loops until the KERNEL probe settles below its
     // clean threshold: a fresh JVM's first kernel runs are 10-100x slow
-    // (JIT tiering + young-gen ramp; KernelScaleProbe measured 8-75 s
+    // (JIT tiering + young-gen ramp; the kernel probe measured 8-75 s
     // first readings vs 0.12-0.48 s settled floors, burn clean
     // throughout) and would otherwise poison the first rep's clean-window
     // gate. No naps here — the ramp is JVM-local, not host throttle;

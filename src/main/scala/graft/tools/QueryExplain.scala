@@ -5,6 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Debug utility: print the formatted physical plan of any registered
   * SparkEntry query. Usage:
   *   sbt "runMain graft.tools.QueryExplain <sfDir> <queryName> [queryName...]"
+  * `q_extract_flagship q_extract_presplit` shows the extraction plan on
+  * the single-row and the pre-split layout (ExtractSpec pins their
+  * exchange count and UDF gating).
   */
 object QueryExplain {
   def main(args: Array[String]): Unit = {

@@ -96,15 +96,23 @@ class BfsFixpointSpec extends AnyFunSuite {
     GraphQ.qBfsFixpoint(spark, dir).count() // warm lineage/memos
 
     val countActions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
     val qel = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
         if (funcName == "count") countActions.incrementAndGet()
+        else if (funcName == "collect") drained.countDown()
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(qel)
     try {
+      // the listener bus is async and FIFO: the warm-up's count events
+      // can still be queued here, so wait for a sentinel action posted
+      // after them, then count from zero
+      spark.range(1).collect()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      countActions.set(0)
       val n = GraphQ.qBfsFixpoint(spark, dir).count()
       Thread.sleep(500) // async listener bus
       assert(n > 0)

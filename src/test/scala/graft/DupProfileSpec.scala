@@ -48,28 +48,6 @@ class DupProfileSpec extends AnyFunSuite {
     // exact duplicates of its own
     val exact = DedupQ.qDedupExact(spark, dir).collect().map(_.getLong(2))
     assert(exact.forall(_ == 1L), "corpus gained natural exact dups")
-    // second precondition (round-5 ADVICE): the injected upper-case tier
-    // relies on Spark upper() (Java full case mapping) and DuckDB upper()
-    // (utf8proc simple mapping) agreeing — they diverge on full-casing
-    // characters (ß -> SS, fi-ligatures, final sigma, İ/ı, ŉ, ǰ). Pin
-    // that no doc_id % 7 == 0 document contains one.
-    val fullCasing = "[ßﬁﬂﬀﬃﬄﬆςŉǰİı]".r
-    val risky = spark.read.parquet(s"$dir/documents.parquet")
-      .filter(org.apache.spark.sql.functions.col("doc_id") % 7 === 0)
-      .select("text").collect()
-      .count(r => fullCasing.findFirstIn(r.getString(0)).isDefined)
-    assert(risky == 0, s"$risky doc_id%7 docs contain full-casing chars — " +
-      "Spark/DuckDB upper() would diverge on the injected tier")
-    // third precondition (round-5 ADVICE #2): NULL text diverges between
-    // the engines — the Spark side drops NULL fingerprints via
-    // fp.isNotNull while the frozen oracle's GROUP BY fp would keep a
-    // NULL-fingerprint cluster. Pin that the corpus has no NULL text so
-    // the divergence stays vacuous (the oracle SQL is a frozen surface;
-    // this assert is the guard the ADVICE asked for).
-    val nullText = spark.read.parquet(s"$dir/documents.parquet")
-      .filter(org.apache.spark.sql.functions.col("text").isNull).count()
-    assert(nullText == 0, s"$nullText NULL-text docs — q_dup_profile's " +
-      "Spark/DuckDB NULL-fingerprint handling would diverge")
     val ids = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id").collect().map(_.getLong(0))
     val n3 = ids.count(_ % 21 == 0).toLong            // base + upper + spaced
@@ -84,6 +62,33 @@ class DupProfileSpec extends AnyFunSuite {
     // coverage law: histogram docs sum to corpus + injected copies
     // (one upper copy per % 7 doc, one spaced copy per % 21 doc)
     assert(got.map(_._3).sum == ids.length + (n2 + n3) + n3)
+  }
+
+  test("every scale factor: no full-casing chars in the upper tier, no NULL text") {
+    import org.apache.spark.sql.functions.col
+    val root = new java.io.File("/root/testdata")
+    val dirs = root.listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("sf")).map(_.getPath).sorted
+    assert(dirs.nonEmpty, s"no sf* directories under $root")
+    dirs.foreach { dir =>
+      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      // the injected upper-case tier relies on Spark upper() (Java full
+      // case mapping) and DuckDB upper() (utf8proc simple mapping)
+      // agreeing — they diverge on full-casing characters (ß -> SS,
+      // fi-ligatures, final sigma, İ/ı, ŉ, ǰ), so no doc_id % 7 == 0
+      // document may contain one
+      val risky = docs.filter(col("doc_id") % 7 === 0 &&
+        col("text").rlike("[ßﬁﬂﬀﬃﬄﬆςŉǰİı]")).count()
+      assert(risky == 0, s"$dir: $risky doc_id%7 docs contain full-casing chars — " +
+        "Spark/DuckDB upper() would diverge on the injected tier")
+      // NULL text diverges between the engines — the Spark side drops
+      // NULL fingerprints via fp.isNotNull while the frozen oracle's
+      // GROUP BY fp would keep a NULL-fingerprint cluster; with no NULL
+      // text the divergence stays vacuous
+      val nullText = docs.filter(col("text").isNull).count()
+      assert(nullText == 0, s"$dir: $nullText NULL-text docs — q_dup_profile's " +
+        "Spark/DuckDB NULL-fingerprint handling would diverge")
+    }
   }
 
   test("plan: one corpus scan only (injected tiers must not re-read text)") {

@@ -66,6 +66,32 @@ class ExtractSpec extends AnyFunSuite {
       canon(Extract.run(input, spreadThreshold = 0)))
   }
 
+  test("plan shape: 3 hash exchanges on both layouts, every UDF gated on ExtractedKinds") {
+    val input = CorpusGen.fromDocuments(spark, "/root/testdata/sf0.001")
+    Seq("single-row" -> input, "pre-split" -> CorpusGen.preSplit(input)).foreach { case (layout, df) =>
+      // spreadThreshold = 0 routes every doc through the mega-doc path
+      val plan = Extract.run(df, spreadThreshold = 0).queryExecution.executedPlan.toString
+      val exchanges = "(?m)^.*Exchange hashpartitioning".r.findAllIn(plan).length
+      assert(exchanges == 3, s"$layout: $exchanges hash exchanges in\n$plan")
+      // pass-through short-circuit: the extraction UDF appears only
+      // inside the CASE branch gated on the extracted kinds
+      val udfLines = plan.linesIterator.filter(_.contains("UDF(")).toVector
+      // with zero UDF sites the gating check below would pass vacuously
+      assert(udfLines.nonEmpty, s"$layout: no UDF site in\n$plan")
+      udfLines.foreach { l =>
+        assert(l.contains("CASE WHEN") && Extract.ExtractedKinds.forall(l.contains),
+          s"$layout: ungated UDF site: $l")
+      }
+    }
+  }
+
+  test("driver contract: SparkEntry.entry returns span sequences at sf0.001") {
+    val out = SparkEntry.entry(spark)
+    assert(out.schema.simpleString ==
+      "struct<doc_id:string,span_seq:array<struct<kind:string,text:string,media_ref:string,order:int>>>")
+    assert(out.count() > 0)
+  }
+
   test("hostile spans: malformed html/hOCR, empty docs, weird kinds survive") {
     import spark.implicits._
     val hostile = Seq(
